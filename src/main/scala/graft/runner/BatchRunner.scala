@@ -169,9 +169,9 @@ final class BatchRunner(
     val jlog = new JobSinkLogger(jobId, clock, logToConsole)
     val start = clock.now()
     try {
-      // pre-handlers: ANY hard-failed dep or dep test failure fails this job
-      // (batch_runner.py:326-380; re-read from the stored batch).
-      preHandlerErrors(batch, batchId, job) match {
+      // pre-handlers: a hard-failed dep fails this job (batch_runner.py:326-380),
+      // decided from the results this runner persisted for the batch so far.
+      preHandlerErrors(job, sofar) match {
         case Some(err) =>
           jlog.error(err)
           JobResult(jobId, batchId, job.name, JobStatus.Failed(err),
@@ -207,14 +207,14 @@ final class BatchRunner(
 
   /** Faithful to batch_runner.py:347-367: the job fails only when a
     * dependency HARD-failed (raised); dependency test failures alone do NOT
-    * block — they only join the message when a hard failure also exists. */
-  private def preHandlerErrors(batch: Batch, batchId: String,
-      job: JobSpec): Option[String] = {
-    if (job.dependencies.isEmpty) return None
-    // fresh read of the stored batch — read-after-write (batch_runner.py:338-340)
-    val status = store.batchById(batchId)
-    val deps = status.map(_.jobResults.filter(r => job.dependencies.contains(r.jobName)))
-      .getOrElse(Nil)
+    * block — they only join the message when a hard failure also exists.
+    * The reference re-reads the running batch here (batch_runner.py:338-340);
+    * `sofar` holds exactly the rows this runner persisted for it, which
+    * equal the store's rows under the single-writer contract, so the
+    * decision needs no store read. */
+  private def preHandlerErrors(job: JobSpec,
+      sofar: Seq[JobResult]): Option[String] = {
+    val deps = sofar.filter(r => job.dependencies.contains(r.jobName))
     val hardFailed = deps.filter(_.status.isInstanceOf[JobStatus.Failed])
       .map(_.jobName).sorted
     val testFailed = deps.filter(r => r.testResults.exists(!_.passed))

@@ -4,8 +4,9 @@ import java.time.Instant
 
 import graft.model._
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Flat admin-table rows (DTO layer). Mirrors admin_orm.py:34-93: five
   * relational tables — batches, jobs, job_test_results, batch_log, job_log —
@@ -37,9 +38,12 @@ final case class LogRow(
   * Write discipline (SURVEY.md §7 hard parts): parquet has no MERGE, so
   * upsert/retention are read → rewrite-to-temp → atomic-ish swap. Writing to
   * a temp dir first means we never overwrite a table that is feeding the
-  * plan that computes its replacement. Reads are always fresh (no caching)
-  * so mid-batch re-reads observe every prior write — the read-after-write
-  * discipline the reference gets from its RDBMS (batch_runner.py:338-340).
+  * plan that computes its replacement. Reads are always fresh (no caching):
+  * every read lists the table's current files, so a report or a later run
+  * sees every prior write. The runner itself never reads its own batch
+  * back — its pre-handlers decide from the results it persisted
+  * (BatchRunner.preHandlerErrors). Every read declares its table's schema
+  * (the case-class encoder's), so no read launches a schema-inference job.
   *
   * Scale note: admin tables grow with runs × jobs, not with data volume —
   * the rewrite-based upsert is O(table) but the table is tiny relative to
@@ -225,8 +229,20 @@ final class AdminStore(val spark: SparkSession, val root: String)
     fs.exists(dst)
   }
 
-  private def readOr[T: org.apache.spark.sql.Encoder](table: String): Dataset[T] =
-    if (exists(table)) spark.read.parquet(path(table)).as[T]
+  private def schemaOf(table: String): StructType = table match {
+    case BATCHES          => Encoders.product[BatchRow].schema
+    case JOBS             => Encoders.product[JobRow].schema
+    case JOB_TEST_RESULTS => Encoders.product[JobTestRow].schema
+    case BATCH_LOG | JOB_LOG => Encoders.product[LogRow].schema
+    case other => throw new IllegalArgumentException(s"unknown admin table '$other'")
+  }
+
+  /** The one parquet read of an admin table, with its declared schema. */
+  private def read(table: String): DataFrame =
+    spark.read.schema(schemaOf(table)).parquet(path(table))
+
+  private def readOr[T: Encoder](table: String): Dataset[T] =
+    if (exists(table)) read(table).as[T]
     else spark.emptyDataset[T]
 
   def batches: Dataset[BatchRow] = readOr[BatchRow](BATCHES)
@@ -268,7 +284,7 @@ final class AdminStore(val spark: SparkSession, val root: String)
   /** Retention rewrite: keep rows with ts >= cutoff. */
   def deleteOlderThan(table: String, cutoff: Instant): Long = ioLock.synchronized {
     if (!exists(table)) return 0L
-    val df = spark.read.parquet(path(table))
+    val df = read(table)
     val cutoffLit = lit(java.sql.Timestamp.from(cutoff))
     val n = df.filter(col("ts") < cutoffLit).count()
     if (n > 0) swapWrite(table, df.filter(col("ts") >= cutoffLit))

@@ -75,10 +75,13 @@ trait AdminStoreApi {
     df.filter(lower(col(nameCol)) === name.toLowerCase)
       .orderBy(col("ts").desc, col("id").desc)
 
+  /** The `n` most recent runs of a batch, newest first. */
+  private def latestRuns(name: String, n: Int): Seq[BatchRow] =
+    byNameDesc(batches.toDF(), "name", name).as[BatchRow].take(n).toSeq
+
   /** Latest run of a batch (get_latest, sqlalchemy_batch_repository.py:47-56). */
   def latestBatch(name: String): Option[BatchStatus] = sync {
-    byNameDesc(batches.toDF(), "name", name).as[BatchRow]
-      .take(1).headOption.map(hydrate)
+    latestRuns(name, 1).headOption.map(hydrate)
   }
 
   /** Stored state of one batch run, by id (fresh read). */
@@ -89,8 +92,7 @@ trait AdminStoreApi {
   /** Previous run — OFFSET 1 because the current in-progress row is already
     * inserted (sqlalchemy_batch_repository.py:76-86). */
   def previousBatch(name: String): Option[BatchStatus] = sync {
-    byNameDesc(batches.toDF(), "name", name).as[BatchRow]
-      .take(2).drop(1).headOption.map(hydrate)
+    latestRuns(name, 2).lift(1).map(hydrate)
   }
 
   /** Reconstruct the nested BatchStatus from the flat tables (the join +
@@ -150,9 +152,13 @@ trait AdminStoreApi {
       .flatMap(r => Option(r.getTimestamp(0)).map(_.toInstant))
 
   /** Regression delta between the latest two runs
-    * (get_latest_batch_delta, sqlalchemy_batch_repository.py:58-74). */
-  def batchDelta(name: String): Option[BatchDelta] =
-    latestBatch(name).map(cur => BatchDelta(cur, previousBatch(name)))
+    * (get_latest_batch_delta, sqlalchemy_batch_repository.py:58-74). Both
+    * runs come from one sorted read under one lock, so a same-name batch
+    * appended in between cannot make "previous" the old "current". */
+  def batchDelta(name: String): Option[BatchDelta] = sync {
+    val runs = latestRuns(name, 2)
+    runs.headOption.map(cur => BatchDelta(hydrate(cur), runs.lift(1).map(hydrate)))
+  }
 
   /** Execution-TIME regression report: jobs whose latest completed run
     * took more than `factor`× the median of its prior completed runs —

@@ -5,7 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.TestSpark
 import graft.model._
-import graft.store.AdminStore
+import graft.store._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -134,6 +135,34 @@ class RunnerSpec extends AnyFunSuite {
         assert(msg.contains("had test failures: flaky"))
       case other => fail(s"expected combined failure, got $other")
     }
+  }
+
+  test("pre-handlers decide from the runner's own results: no batchById re-reads") {
+    val clock = new StepClock(Instant.parse("2024-06-01T12:00:00Z"))
+    val store = new CountingStore(new AdminStore(spark, TestSpark.tmpDir("runner")))
+    val runner = new BatchRunner(spark, store, clock)
+    def flaky(name: String) = SimpleJob(name,
+      runFn = (_, _) => JobStatus.Successful,
+      testFn = (_, _) => Seq(SimpleTestResult.failing("always", "nope")))
+    val status = runner.run(Batch("prehandlers", Seq(
+      okJob("root"), okJob("mid", deps = Seq("root")),
+      okJob("leaf", deps = Seq("root", "mid")),
+      badJob("dead"), flaky("flaky"),
+      okJob("after_dead", deps = Seq("dead", "root")),
+      okJob("after_both", deps = Seq("dead", "flaky")),
+      okJob("after_flaky", deps = Seq("flaky")))))
+    assert(store.batchByIdCalls.get == 0)
+    val byName = status.jobResults.map(r => r.jobName -> r.status).toMap
+    Seq("root", "mid", "leaf", "flaky", "after_flaky").foreach(n =>
+      assert(byName(n) == JobStatus.Successful, n))
+    assert(byName("after_dead") ==
+      JobStatus.Failed("The following dependencies failed to execute: dead"))
+    assert(byName("after_both") ==
+      JobStatus.Failed("The following dependencies failed to execute: dead " +
+        "and the following jobs had test failures: flaky"))
+    // the stored batch agrees with what the runner returned
+    val stored = store.latestBatch("prehandlers").get
+    assert(stored.jobResults.map(r => r.jobName -> r.status).toMap == byName)
   }
 
   test("refresh cadence: strict > gate (batch_runner.py:188-190)") {
@@ -337,6 +366,41 @@ class RunnerSpec extends AnyFunSuite {
     assert(status.jobResults.head.status == JobStatus.Successful)
     assert(status.jobResults.head.testResults.forall(_.passed))
     assert(store.batchLog.toDF().filter(col("message") === "ancient").count() == 0)
+  }
+
+  /** Delegates every operation to `inner` and counts `batchById` calls. */
+  final class CountingStore(inner: AdminStoreApi) extends AdminStoreApi {
+    val spark: SparkSession = inner.spark
+    val batchByIdCalls = new AtomicInteger(0)
+    protected def sync[T](f: => T): T = f
+
+    def batches: Dataset[BatchRow] = inner.batches
+    def jobs: Dataset[JobRow] = inner.jobs
+    def jobTestResults: Dataset[JobTestRow] = inner.jobTestResults
+    def batchLog: Dataset[LogRow] = inner.batchLog
+    def jobLog: Dataset[LogRow] = inner.jobLog
+    def appendBatches(rows: Seq[BatchRow]): Unit = inner.appendBatches(rows)
+    def appendJobs(rows: Seq[JobRow]): Unit = inner.appendJobs(rows)
+    def appendJobTests(rows: Seq[JobTestRow]): Unit = inner.appendJobTests(rows)
+    def appendBatchLog(rows: Seq[LogRow]): Unit = inner.appendBatchLog(rows)
+    def appendJobLog(rows: Seq[LogRow]): Unit = inner.appendJobLog(rows)
+    def upsertBatches(rows: Seq[BatchRow]): Unit = inner.upsertBatches(rows)
+    def upsertJobs(rows: Seq[JobRow]): Unit = inner.upsertJobs(rows)
+    def deleteOlderThan(table: String, cutoff: Instant): Long =
+      inner.deleteOlderThan(table, cutoff)
+    def deleteBatchesOlderThan(cutoff: Instant): Long =
+      inner.deleteBatchesOlderThan(cutoff)
+    def close(): Unit = inner.close()
+
+    override def batchById(id: String): Option[BatchStatus] = {
+      batchByIdCalls.incrementAndGet()
+      inner.batchById(id)
+    }
+    override def latestBatch(name: String): Option[BatchStatus] = inner.latestBatch(name)
+    override def lastSuccessfulTs(jobName: String): Option[Instant] =
+      inner.lastSuccessfulTs(jobName)
+    override def latestTestResults(jobName: String): Seq[JobTestRow] =
+      inner.latestTestResults(jobName)
   }
 
   test("CompactTable maintenance job: versioned cutover through the runner, conservation test passes") {

@@ -1,8 +1,12 @@
 package graft.store
 
 import java.time.Instant
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.TestSpark
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Dataset
 
 /** Parquet-directory backend: the shared AdminStoreContract plus the
   * durability mechanics only this backend has — swap-rename crash
@@ -13,6 +17,92 @@ class AdminStoreSpec extends AdminStoreContract {
     new AdminStore(TestSpark.spark, TestSpark.tmpDir("admin"))
   private def newParquetStore(): AdminStore =
     new AdminStore(TestSpark.spark, TestSpark.tmpDir("admin"))
+
+  /** Spark jobs launched by `f` on this thread, counted by a listener that
+    * keys on a local property only this call sets (other threads' jobs are
+    * not counted). */
+  private def sparkJobs(f: => Any): Int = {
+    val sc = TestSpark.spark.sparkContext
+    val key = "graft.test.jobcount"
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try f
+    finally {
+      sc.setLocalProperty(key, null)
+      TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  private def id(s: String) = s.padTo(32, '0')
+
+  test("admin reads declare their schema: no schema-inference jobs") {
+    val st = newParquetStore()
+    def job(j: String, b: String, ts: Instant) = JobRow(id(j), id(b), j,
+      Some(1L), Some(false), None, running = false, skipped = false, None, ts)
+    // two runs of one batch, two jobs each, no tests
+    st.appendBatches(Seq(batchRow("b1", "nightly", t("2024-01-01T00:00:00Z")),
+      batchRow("b2", "nightly", t("2024-01-02T00:00:00Z"))))
+    st.appendJobs(Seq(job("j1", "b1", t("2024-01-01T00:00:00Z")),
+      job("j2", "b1", t("2024-01-01T00:01:00Z")),
+      job("j3", "b2", t("2024-01-02T00:00:00Z")),
+      job("j4", "b2", t("2024-01-02T00:01:00Z"))))
+    assert(sparkJobs(st.jobs.collect()) == 1)
+    assert(sparkJobs(st.lastSuccessfulTs("j3")) == 2)
+    val latestThenPrevious =
+      sparkJobs { st.latestBatch("nightly"); st.previousBatch("nightly") }
+    val delta = sparkJobs(st.batchDelta("nightly"))
+    info(s"batchDelta: $delta Spark jobs; latestBatch + previousBatch: $latestThenPrevious")
+    assert(delta < latestThenPrevious)
+    val d = st.batchDelta("nightly").get
+    assert(d.current.id == id("b2") && d.previous.map(_.id).contains(id("b1")))
+    assert(d.commonJobs.isEmpty) // the two runs share no job name
+  }
+
+  test("declared schemas round-trip every table, through append and the retention rewrite") {
+    val st = newParquetStore()
+    val old = t("2024-01-01T00:00:00Z")
+    val ts = t("2024-03-01T10:20:30.123456Z") // microsecond precision
+    val cutoff = t("2024-02-01T00:00:00Z")
+    // per table: a row the retention pass deletes, a row with every Option
+    // None and a row with every Option Some
+    def roundTrip[T](table: String, rows: Seq[T])(append: Seq[T] => Unit,
+        read: => Dataset[T]): Unit = {
+      append(rows)
+      assert(read.collect().toSet == rows.toSet, table)
+      assert(st.deleteOlderThan(table, cutoff) == 1, table)
+      assert(read.collect().toSet == rows.tail.toSet, table)
+    }
+    roundTrip(st.BATCHES, Seq(
+      BatchRow(id("b0"), "nightly", None, None, None, running = false, old),
+      BatchRow(id("b1"), "nightly", None, None, None, running = true, ts),
+      BatchRow(id("b2"), "nightly", Some(7L), Some(true), Some("boom"),
+        running = false, ts)))(st.appendBatches, st.batches)
+    roundTrip(st.JOBS, Seq(
+      JobRow(id("j0"), id("b0"), "job", None, None, None, running = false,
+        skipped = false, None, old),
+      JobRow(id("j1"), id("b1"), "job", None, None, None, running = true,
+        skipped = false, None, ts),
+      JobRow(id("j2"), id("b2"), "job", Some(9L), Some(false), Some("msg"),
+        running = false, skipped = true, Some("why"), ts)))(st.appendJobs, st.jobs)
+    roundTrip(st.JOB_TEST_RESULTS, Seq(
+      JobTestRow(id("t0"), id("j0"), "check", test_passed = true, None, old),
+      JobTestRow(id("t1"), id("j1"), "check", test_passed = true, None, ts),
+      JobTestRow(id("t2"), id("j2"), "check", test_passed = false, Some("0 rows"),
+        ts)))(st.appendJobTests, st.jobTestResults)
+    def logs(p: String) = Seq(LogRow(id(s"${p}0"), id("b0"), "INFO", "old", old),
+      LogRow(id(s"${p}1"), id("b1"), "INFO", "first", ts),
+      LogRow(id(s"${p}2"), id("b2"), "ERROR", "second", ts))
+    roundTrip(st.BATCH_LOG, logs("l"))(st.appendBatchLog, st.batchLog)
+    roundTrip(st.JOB_LOG, logs("m"))(st.appendJobLog, st.jobLog)
+  }
 
   test("swapWrite survives a stale .old backup from a simulated crash") {
     val st = newParquetStore()
